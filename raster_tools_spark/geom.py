@@ -56,9 +56,14 @@ def points_in_rings(px, py, rings, chunk=262144):
     Returns a boolean array aligned with ``px``/``py``.  Vectorized over
     points x edges, chunked to bound memory.
     """
+    return _points_in_edges(px, py, _edges_of_rings(rings), chunk)
+
+
+def _points_in_edges(px, py, edges, chunk=262144):
+    """``points_in_rings`` over stacked ``(x1, y1, x2, y2)`` edges."""
     px = np.asarray(px, dtype=np.float64).ravel()
     py = np.asarray(py, dtype=np.float64).ravel()
-    x1, y1, x2, y2 = _edges_of_rings(rings)
+    x1, y1, x2, y2 = edges
     n_edges = x1.size
     if n_edges == 0:
         return np.zeros(px.shape, dtype=bool)
@@ -96,58 +101,102 @@ def rasterize_mask(wkb_bytes: bytes, gt: GeoTransform, height: int, width: int):
 def rasterize_mask_rings(
     rings, gt: GeoTransform, height: int, width: int
 ) -> np.ndarray:
-    """Clipped + short-circuit rasterization (the 100-TB-minded path):
-
-    1. only pixels inside the polygon envelope are candidates -- the
-       rest of the tile is skipped without testing;
-    2. if no ring crosses the candidate window, the whole window is
-       uniformly in or out: one center test decides it (fast path for
-       tiles fully covered by hot polygons);
-    3. otherwise ray-cast only the clipped window.
-    """
-    p, a, b, q, c, d = gt
+    """Full ``height x width`` pixel-center mask of a ring set: the
+    window that ``rasterize_window`` reports, burned into a tile-sized
+    array."""
     mask = np.zeros((height, width), dtype=bool)
-
-    env = _rings_env(rings)
-    # pixel-center coordinate of col j: p + a*(j+0.5); assume north-up
-    # (b == c == 0), which holds for every grid in this engine
-    j0 = max(int(np.floor((env[0] - p) / a - 0.5)), 0)
-    j1 = min(int(np.ceil((env[1] - p) / a - 0.5)) + 1, width)
-    # rows: y = q + d*(i+0.5), d < 0
-    i0 = max(int(np.floor((env[3] - q) / d - 0.5)), 0)
-    i1 = min(int(np.ceil((env[2] - q) / d - 0.5)) + 1, height)
-    if j0 >= j1 or i0 >= i1:
-        return mask
-
-    wx1 = p + a * j0
-    wx2 = p + a * j1
-    wy2 = q + d * i0
-    wy1 = q + d * i1
-    crossing = any(
-        _bbox_overlap(_ring_env(r), (wx1, wx2, wy1, wy2)) for r in rings
-    )
-    sub_w = j1 - j0
-    sub_h = i1 - i0
-    if not crossing:
-        cx = p + a * (j0 + 0.5)
-        cy = q + d * (i0 + 0.5)
-        if bool(points_in_rings([cx], [cy], rings)[0]):
-            mask[i0:i1, j0:j1] = True
-        return mask
-
-    _scanline_fill(mask, rings, p, a, q, d, i0, i1, j0, j1)
+    i0, i1, j0, j1, win = rasterize_window(rings, gt, height, width)
+    if win is not False:
+        mask[i0:i1, j0:j1] = win
     return mask
 
 
-def _scanline_fill(mask, rings, p, a, q, d, i0, i1, j0, j1):
-    """Even-odd scanline fill over row centers -- O(rows x edges), not
-    O(pixels x edges), with results bit-identical to the per-point ray
-    cast (same strict ``cx < xint`` crossing rule):
+_WINDOW_EPS = 1e-6  # pixels
+
+
+def rasterize_window(rings, gt: GeoTransform, height: int, width: int):
+    """Clipped + short-circuit rasterization (the 100-TB-minded path).
+
+    Returns ``(i0, i1, j0, j1, win)``: every set pixel lies in the
+    window ``[i0:i1, j0:j1]``, and ``win`` is ``True`` (the window is a
+    filled rectangle), ``False`` (no pixel is set) or the window's
+    boolean mask (a ring edge crosses it).
+
+    1. only pixels whose centers lie in the polygon envelope are
+       candidates -- the rest of the tile is skipped without testing;
+    2. if no ring EDGE passes through the window's interior, every
+       pixel center of the window lies in one connected piece of the
+       plane minus the boundary, so one center test decides the whole
+       window (a tile inside a large polygon, or inside one of its
+       holes, costs one point test);
+    3. otherwise scanline-fill only the clipped window.
+
+    The result equals the scanline fill of the window bit for bit:
+    centers sit half a pixel inside the window, so an edge that only
+    touches the window's border cannot separate two of them.
+    """
+    p, a, b, q, c, d = gt
+    env = _rings_env(rings)
+    # the window holds the centers inside the half-open envelope
+    # (xmin <= x < xmax, ymin <= y < ymax); _WINDOW_EPS pixels of slack
+    # keep a center that rounding puts on the envelope border.  Col j's
+    # center is p + a*(j+0.5); assume north-up (b == c == 0), which
+    # holds for every grid in this engine
+    j0 = max(int(np.ceil((env[0] - p) / a - 0.5 - _WINDOW_EPS)), 0)
+    j1 = min(int(np.floor((env[1] - p) / a - 0.5 + _WINDOW_EPS)) + 1, width)
+    # rows: y = q + d*(i+0.5), d < 0
+    i0 = max(int(np.ceil((env[3] - q) / d - 0.5 - _WINDOW_EPS)), 0)
+    i1 = min(int(np.floor((env[2] - q) / d - 0.5 + _WINDOW_EPS)) + 1, height)
+    if j0 >= j1 or i0 >= i1:
+        return 0, 0, 0, 0, False
+
+    edges = _edges_of_rings(rings)
+    window = (p + a * j0, p + a * j1, q + d * i1, q + d * i0)
+    if not _edges_cross_window(edges, window):
+        cx = p + a * (j0 + 0.5)
+        cy = q + d * (i0 + 0.5)
+        inside = bool(_points_in_edges([cx], [cy], edges)[0])
+        return i0, i1, j0, j1, inside
+    return i0, i1, j0, j1, _scanline_fill(edges, p, a, q, d, i0, i1, j0, j1)
+
+
+def _edges_cross_window(edges, window) -> bool:
+    """Does any edge segment meet the OPEN rectangle ``window``
+    (x1, x2, y1, y2)?  Separating-axis test per edge: the segment misses
+    the open rectangle iff its bbox misses it along x or y, or all four
+    corners lie on one closed side of the edge's line.  Touching the
+    border does not count as crossing."""
+    x1, y1, x2, y2 = edges
+    wx1, wx2, wy1, wy2 = window
+    hit = (
+        (np.maximum(x1, x2) > wx1) & (np.minimum(x1, x2) < wx2)
+        & (np.maximum(y1, y2) > wy1) & (np.minimum(y1, y2) < wy2)
+    )
+    if not hit.any():
+        return False
+    x1, y1, x2, y2 = x1[hit], y1[hit], x2[hit], y2[hit]
+    dx = x2 - x1
+    dy = y2 - y1
+    pos = np.zeros(x1.shape, dtype=bool)
+    neg = np.zeros(x1.shape, dtype=bool)
+    for cx, cy in ((wx1, wy1), (wx2, wy1), (wx1, wy2), (wx2, wy2)):
+        side = dx * (cy - y1) - dy * (cx - x1)
+        pos |= side > 0
+        neg |= side < 0
+    return bool((pos & neg).any())
+
+
+def _scanline_fill(edges, p, a, q, d, i0, i1, j0, j1) -> np.ndarray:
+    """Even-odd scanline fill of stacked ring ``edges`` over row centers
+    of the window ``[i0:i1, j0:j1]``, returned as its boolean mask --
+    O(rows x edges), not O(pixels x edges), with results bit-identical
+    to the per-point ray cast (same strict ``cx < xint`` crossing rule):
 
     per row, sorted edge intersections t1 <= t2 <= ... bound the inside
     intervals [t1, t2), [t3, t4), ... (cx == t_odd is inside because a
     crossing at exactly cx is not counted to the right)."""
-    x1e, y1e, x2e, y2e = _edges_of_rings(rings)
+    sub = np.zeros((i1 - i0, j1 - j0), dtype=bool)
+    x1e, y1e, x2e, y2e = edges
     ys = q + d * (np.arange(i0, i1, dtype=np.float64) + 0.5)
     with np.errstate(divide="ignore", invalid="ignore"):
         straddle = (y1e[None, :] > ys[:, None]) != (
@@ -159,7 +208,7 @@ def _scanline_fill(mask, rings, p, a, q, d, i0, i1, j0, j1):
     counts = straddle.sum(axis=1)
     maxm = int(counts.max()) if counts.size else 0
     if maxm < 2:
-        return
+        return sub
     # vectorized interval fill: the same even-odd pairs ((0,1), (2,3),
     # ...; an odd trailing crossing is skipped exactly as the scalar
     # loop did), the same ceil((t - p)/a - 0.5) pixel arithmetic, then
@@ -176,29 +225,26 @@ def _scanline_fill(mask, rings, p, a, q, d, i0, i1, j0, j1):
     # clamp BEFORE the int cast: ceil yields exact integral floats, so
     # clamping to the integer bounds commutes with the cast while
     # keeping huge intersections (near-horizontal edges) in range
-    js = np.clip(jsf, j0, j1).astype(np.int64)
-    je = np.clip(jef, j0, j1).astype(np.int64)
+    js = np.minimum(np.maximum(jsf, j0), j1).astype(np.int64)
+    je = np.minimum(np.maximum(jef, j0), j1).astype(np.int64)
     valid &= je > js
     if not valid.any():
-        return
+        return sub
     if maxm == 2:
         # one interval per row (every convex ring): a broadcast range
         # test needs no scatter or cumsum
         cols = np.arange(j0, j1)
-        inside = (
+        return (
             valid[:, :1]
             & (cols[None, :] >= js[:, :1])
             & (cols[None, :] < je[:, :1])
         )
-        mask[i0:i1, j0:j1] |= inside
-        return
     rows, cols = np.nonzero(valid)
     width1 = j1 - j0 + 1
     diff = np.zeros((i1 - i0) * width1, dtype=np.int32)
     np.add.at(diff, rows * width1 + (js[rows, cols] - j0), 1)
     np.add.at(diff, rows * width1 + (je[rows, cols] - j0), -1)
-    inside = diff.reshape(i1 - i0, width1).cumsum(axis=1)[:, :-1] > 0
-    mask[i0:i1, j0:j1] |= inside
+    return diff.reshape(i1 - i0, width1).cumsum(axis=1)[:, :-1] > 0
 
 
 def _ring_env(ring: np.ndarray):
@@ -215,17 +261,6 @@ def _rings_env(rings):
         max(e[1] for e in envs),
         min(e[2] for e in envs),
         max(e[3] for e in envs),
-    )
-
-
-def _bbox_overlap(a, b) -> bool:
-    """(x1, x2, y1, y2) envelope intersection test.
-
-    Interior-overlap semantics on the ring-bbox side: a ring whose bbox
-    merely touches the window edge cannot flip any pixel-center test
-    inside the window, so touching does not count as crossing."""
-    return not (
-        a[1] <= b[0] or a[0] >= b[1] or a[3] <= b[2] or a[2] >= b[3]
     )
 
 

@@ -8,9 +8,11 @@ inverse-affine grid math (utils.py:114-144).  The anchor is a
 deterministic function of ``phash`` (FIXTURES.md section 1); the
 wrapping int64 Knuth multiply that ANSI-mode Spark SQL rejects is
 decomposed into overflow-free halves (see ``_anchor_cols``), so the
-anchor AND everything downstream -- cell keys at every resolution,
-parent rollups -- are JVM-side expressions that stay inside
-whole-stage codegen; no Python hop remains on the image scan path.
+anchor AND the cell keys derived from it -- at every resolution,
+parent rollups included -- are JVM-side expressions that stay inside
+whole-stage codegen.  The ``hilbert`` key is still an Arrow
+pandas UDF: a Python hop on the scan whenever a consumer reads that
+column (column pruning drops it otherwise).
 
 Scale notes: no shuffle here at all; this is a narrow map over the scan.
 ``hilbert`` is the range-partitioning key that keeps spatially adjacent

@@ -12,13 +12,17 @@ Spark-first shape (the reference's per-feature loop becomes one job):
 
 1. bbox prejoin on covering cells (J2) pairs images with polygons;
 2. ``mapInPandas`` decodes each paired tile ONCE, rasterizes the polygon
-   mask, and emits a tiny partial-stats row (count, sum, sumsq, min,
+   window, and emits a tiny partial-stats row (count, sum, sumsq, min,
    max, 256-bin histogram) -- the expensive pixel work happens map-side,
    mirroring the reference's blocked partial aggregation
-   (ruimtekaart.py:214-233);
-3. ``groupBy(feat_id)`` combines partials; exact percentiles come from
-   the merged uint8 histogram (bit-exact vs np.percentile, no
-   approx_percentile needed because the value domain is u8).
+   (ruimtekaart.py:214-233).  On a u8 band every partial comes from one
+   ``bincount``: a tile inside the polygon reuses the image's own
+   histogram, and only tiles an edge crosses gather through a mask;
+3. ``groupBy(feat_id)`` combines partials with plain Spark aggregates
+   (``_combine``, no Python stage); exact percentiles come from the
+   merged uint8 histogram through JVM higher-order functions (bit-exact
+   vs np.percentile, no approx_percentile needed because the value
+   domain is u8).
 
 Per-pair partial rows are ~300 bytes vs ~64 KiB of pixels, so the
 shuffle moves ~0.5% of the scanned data -- the property that keeps this
@@ -118,8 +122,54 @@ def _image_cover_udf(res: int):
 
 _PARTIAL_SCHEMA = (
     "feat_id long, size long, cnt long, s double, ss double, "
-    "mn double, mx double, hist array<long>, decode_bytes long"
+    "mn double, mx double, hist array<long>"
 )
+
+_U8_VALUES = np.arange(256, dtype=np.int64)
+_U8_SQUARES = _U8_VALUES * _U8_VALUES
+
+
+def _hist_partial(sel: np.ndarray, nodata):
+    """Partial stats of a u8 pixel selection from its 256-bin histogram
+    ``sel``: (size, cnt, s, ss, mn, mx, data histogram).  Every sum is
+    an integer below 2^53, so each equals the gather path's float sum
+    exactly."""
+    hist = sel.astype(np.int64)  # a copy: the caller's array stays intact
+    nd = float(nodata)
+    if nd.is_integer() and 0 <= nd <= 255:  # the bin vals != nodata drops
+        hist[int(nd)] = 0
+    cnt = int(hist.sum())
+    mn = mx = float("nan")
+    if cnt:
+        nz = np.flatnonzero(hist)
+        mn, mx = float(nz[0]), float(nz[-1])
+    return (int(sel.sum()), cnt, float(hist @ _U8_VALUES),
+            float(hist @ _U8_SQUARES), mn, mx, hist)
+
+
+def _gather_partial(vals: np.ndarray, nodata, expr: str | None):
+    """Partial stats of a gathered pixel selection (any dtype, optional
+    band expression): (size, cnt, s, ss, mn, mx, data histogram or
+    None)."""
+    data = vals[vals != nodata]
+    if data.dtype == np.uint8:
+        hist = np.bincount(data, minlength=256).astype(np.int64)
+    else:
+        # non-u8 band (f4 DEM etc.): exact-histogram percentiles are a
+        # u8-domain feature; mean/std/min/max remain exact,
+        # median/p75/frac become NaN downstream
+        hist = None
+    if expr is not None and data.size:
+        stat_data = eval_band_expr(expr, data)
+    else:
+        stat_data = data.astype(np.float64)
+    mn = mx = float("nan")
+    if data.size:
+        mn, mx = float(stat_data.min()), float(stat_data.max())
+    return (int(vals.shape[0]), int(data.size),
+            float(stat_data.sum(dtype=np.float64)),
+            float((stat_data.astype(np.float64) ** 2).sum()),
+            mn, mx, hist)
 
 
 def _partials_stream(batches, expr: str | None = None):
@@ -127,8 +177,16 @@ def _partials_stream(batches, expr: str | None = None):
     decode each image once (rows of an image are adjacent after
     sortWithinPartitions), parse each polygon's rings once per task.
 
+    Single-band u8 tiles without ``expr`` take the histogram path: the
+    rasterized window is a filled rectangle, empty, or crossed by an
+    edge, and one ``bincount`` of the selected pixels (for a rectangle
+    covering the whole tile, the image's own histogram, computed once)
+    gives size, count, sum, sum of squares, min and max exactly -- all
+    integers below 2^53.  Other payloads and band expressions gather
+    the masked pixels.
+
     Partials are PRE-AGGREGATED per feat_id within the task before
-    anything crosses back over Arrow: the finalize step is a pure
+    anything crosses back over Arrow: ``_combine`` is a pure
     commutative merge (sums, min/max, histogram adds), so collapsing
     the per-pair rows to one row per (task, feat) is result-identical
     while shrinking the Python->JVM return and the partials shuffle
@@ -143,10 +201,10 @@ def _partials_stream(batches, expr: str | None = None):
     cur_img = None
     px = None
     gt = None
-    n_bytes = 0
+    img_hist = None
     seen: set = set()
     ring_cache: dict = {}
-    # feat_id -> [size, cnt, s, ss, mn, mx, hist, decode_bytes]
+    # feat_id -> [size, cnt, s, ss, mn, mx, hist]
     acc: dict = {}
 
     def _flush():
@@ -154,16 +212,13 @@ def _partials_stream(batches, expr: str | None = None):
             (fid, a[0], a[1], a[2], a[3],
              a[4] if a[1] else float("nan"),
              a[5] if a[1] else float("nan"),
-             a[6], a[7])
+             a[6])
             for fid, a in acc.items()
         ]
         acc.clear()
         return pd.DataFrame(
             rows,
-            columns=[
-                "feat_id", "size", "cnt", "s", "ss", "mn", "mx",
-                "hist", "decode_bytes",
-            ],
+            columns=["feat_id", "size", "cnt", "s", "ss", "mn", "mx", "hist"],
         )
 
     for pdf in batches:
@@ -176,7 +231,7 @@ def _partials_stream(batches, expr: str | None = None):
                 gt = GeoTransform(
                     (t.x0, CELL_SIZE, 0.0, t.y_top, 0.0, -CELL_SIZE)
                 )
-                n_bytes = len(bytes(t.bytes))
+                img_hist = None
                 seen = set()
             if t.feat_id in seen:  # pair dup via shared corner cells
                 continue
@@ -185,40 +240,44 @@ def _partials_stream(batches, expr: str | None = None):
             if rings is None:
                 rings = geom._rings_of(bytes(t.geom_wkb))
                 ring_cache[t.feat_id] = rings
-            mask = geom.rasterize_mask_rings(
-                rings, gt, px.shape[0], px.shape[1]
-            )
-            size = int(mask.sum())
+            h, w = px.shape[:2]
+            i0, i1, j0, j1, win = geom.rasterize_window(rings, gt, h, w)
+            if win is False:
+                continue
+            u8 = px.dtype == np.uint8 and px.ndim == 2 and expr is None
+            if u8 and win is True and (i0, i1, j0, j1) == (0, h, 0, w):
+                if img_hist is None:
+                    img_hist = np.bincount(px.ravel(), minlength=256)
+                part = _hist_partial(img_hist, t.nodata)
+            else:
+                vals = px[i0:i1, j0:j1]
+                if win is True:
+                    vals = vals.reshape(-1, *px.shape[2:])
+                else:
+                    vals = vals[win]
+                if u8:
+                    part = _hist_partial(
+                        np.bincount(vals, minlength=256), t.nodata
+                    )
+                else:
+                    part = _gather_partial(vals, t.nodata, expr)
+            size, cnt, s, ss, mn, mx, hist = part
             if size == 0:
                 continue
-            vals = px[mask]
-            data = vals[vals != t.nodata]
-            if data.dtype == np.uint8:
-                hist = np.bincount(data, minlength=256).astype(np.int64)
-            else:
-                # non-u8 band (f4 DEM etc.): exact-histogram
-                # percentiles are a u8-domain feature; mean/std/min/max
-                # remain exact, median/p75/frac become NaN downstream
-                hist = None
-            if expr is not None and data.size:
-                stat_data = eval_band_expr(expr, data)
-            else:
-                stat_data = data.astype(np.float64)
             a = acc.get(t.feat_id)
             if a is None:
                 a = [0, 0, 0.0, 0.0, math.inf, -math.inf,
-                     np.zeros(256, dtype=np.int64), 0]
+                     np.zeros(256, dtype=np.int64)]
                 acc[t.feat_id] = a
             a[0] += size
-            a[1] += int(data.size)
-            a[2] += float(stat_data.sum(dtype=np.float64))
-            a[3] += float((stat_data.astype(np.float64) ** 2).sum())
-            if data.size:
-                a[4] = min(a[4], float(stat_data.min()))
-                a[5] = max(a[5], float(stat_data.max()))
+            a[1] += cnt
+            a[2] += s
+            a[3] += ss
+            if cnt:
+                a[4] = min(a[4], mn)
+                a[5] = max(a[5], mx)
             if hist is not None:
                 a[6] += hist
-            a[7] += n_bytes
             if len(acc) >= _MAX_ACC_FEATS:
                 yield _flush()
         # batch boundary: keep accumulating (decode state carries over)
@@ -262,46 +321,92 @@ def eval_band_expr(expr: str, values: np.ndarray) -> np.ndarray:
     return np.asarray(eval(compile(tree, "<band_expr>", "eval"), {"__builtins__": {}}, ns))
 
 
-_FINAL_SCHEMA = (
-    "feat_id long, size long, cnt long, mean double, std double, "
-    "mn double, mx double, median double, p75 double, "
-    "frac_in_range double"
-)
+# The combine expressions are SQL text: one F.expr is one py4j call,
+# while building the same lambdas from Column objects takes ~100 calls,
+# about 0.5 s of driver time per job.
+_NAN = "CAST('NaN' AS DOUBLE)"
 
 
-def _finalize(pdf: pd.DataFrame, range_frac=None) -> pd.DataFrame:
-    feat_id = pdf["feat_id"].iloc[0]
-    size = int(pdf["size"].sum())
-    cnt = int(pdf["cnt"].sum())
-    hist = np.sum(np.stack(pdf["hist"].map(np.asarray)), axis=0)
-    frac = float("nan")
-    if cnt:
-        s = float(pdf["s"].sum())
-        ss = float(pdf["ss"].sum())
-        mean = s / cnt
-        # population std (np.std default, matching getattr(np, 'std'))
-        var = max(ss / cnt - mean * mean, 0.0)
-        std = math.sqrt(var)
-        mn = float(pdf["mn"].min())
-        mx = float(pdf["mx"].max())
-        if int(hist.sum()) == cnt:
-            med = percentile_from_hist(hist, 50.0)
-            p75 = percentile_from_hist(hist, 75.0)
-        else:  # non-u8 band: no exact histogram
-            med = p75 = float("nan")
-        if range_frac is not None and int(hist.sum()) == cnt:
-            lo, hi = range_frac
-            # green-factor style in-range fraction, exact from the u8
-            # histogram (green_factor.py:176-193 semantics)
-            frac = float(hist[lo : hi + 1].sum()) / cnt
-    else:
-        mean = std = mn = mx = med = p75 = float("nan")
-    return pd.DataFrame(
-        [(feat_id, size, cnt, mean, std, mn, mx, med, p75, frac)],
-        columns=[
-            "feat_id", "size", "cnt", "mean", "std", "mn", "mx",
-            "median", "p75", "frac_in_range",
-        ],
+def _merged_hist(hist: str) -> str:
+    """Aggregate expression: the element-wise sum of a group's 256-bin
+    histograms."""
+    return (
+        f"aggregate(collect_list({hist}), array_repeat(0L, 256), "
+        "(acc, h) -> zip_with(acc, h, (x, y) -> x + y))"
+    )
+
+
+def _hist_total(hist: str) -> str:
+    return f"aggregate({hist}, 0L, (acc, x) -> acc + x)"
+
+
+def hist_percentile(hist: str, n: str, q: float) -> str:
+    """``percentile_from_hist`` as a Spark SQL expression over a 256-bin
+    histogram column ``hist`` whose total is the column ``n``.
+
+    Both interpolation ranks are found in ONE pass over the bins: the
+    value of rank k is the first bin whose running count reaches k + 1
+    (np.searchsorted on the cumulative sum).  The interpolation is the
+    same IEEE double arithmetic in the same order, so the result is
+    bit-identical; NaN when ``n`` is 0."""
+    pos = f"({q / 100.0!r}D * ({n} - 1))"
+    return f"""IF({n} > 0, aggregate(
+        {hist},
+        named_struct('c', 0L, 'i', 0, 'lo', -1, 'hi', -1),
+        (acc, x) -> named_struct(
+            'c', acc.c + x,
+            'i', acc.i + 1,
+            'lo', IF(acc.lo < 0 AND acc.c + x > FLOOR({pos}), acc.i, acc.lo),
+            'hi', IF(acc.hi < 0 AND acc.c + x > CEIL({pos}), acc.i, acc.hi)),
+        acc -> CAST(acc.lo AS DOUBLE)
+            + CAST(acc.hi - acc.lo AS DOUBLE) * ({pos} - FLOOR({pos}))),
+        {_NAN})"""
+
+
+def _combine(partials: DataFrame, range_frac=None) -> DataFrame:
+    """Merge the partial-stats rows of each feature into its A1 stats
+    with one JVM aggregation (no Python stage).
+
+    - size, cnt, s, ss are summed; min/max run only over partials with
+      data (Spark orders NaN above every number, so an empty partial's
+      NaN would otherwise win ``max``; pandas skipped NaN values too);
+    - mean = s / cnt and the population std sqrt(max(ss/cnt - mean^2, 0))
+      (np.std's default);
+    - median, p75 and ``frac_in_range`` (the inclusive u8 value range
+      ``range_frac``, green_factor.py:176-193 semantics) come from the
+      merged histogram, and only when it holds every data pixel (a u8
+      band); otherwise NaN.
+
+    Every sum of a u8 feature is of integers below 2^53, so the result
+    is bit-identical whatever order Spark sums in."""
+    merged = partials.groupBy("feat_id").agg(
+        F.sum("size").alias("size"),
+        F.sum("cnt").alias("cnt"),
+        F.sum("s").alias("s"),
+        F.sum("ss").alias("ss"),
+        F.expr("min(IF(cnt > 0 AND NOT isnan(mn), mn, NULL))").alias("mn"),
+        F.expr("max(IF(cnt > 0 AND NOT isnan(mx), mx, NULL))").alias("mx"),
+        F.expr(_merged_hist("hist")).alias("hist"),
+    )
+    u8 = f"cnt > 0 AND {_hist_total('hist')} = cnt"
+    frac = _NAN
+    if range_frac is not None:
+        lo, hi = (int(v) for v in range_frac)
+        in_range = _hist_total(
+            f"filter(hist, (x, i) -> i >= {lo} AND i <= {hi})"
+        )
+        frac = f"IF({u8}, CAST({in_range} AS DOUBLE) / cnt, {_NAN})"
+    return merged.selectExpr(
+        "feat_id", "size", "cnt",
+        f"IF(cnt > 0, s / cnt, {_NAN}) AS mean",
+        f"IF(cnt > 0, sqrt(greatest(ss / cnt - (s / cnt) * (s / cnt), 0D)),"
+        f" {_NAN}) AS std",
+        # null only when no partial has data
+        f"coalesce(mn, {_NAN}) AS mn",
+        f"coalesce(mx, {_NAN}) AS mx",
+        f"IF({u8}, {hist_percentile('hist', 'cnt', 50.0)}, {_NAN}) AS median",
+        f"IF({u8}, {hist_percentile('hist', 'cnt', 75.0)}, {_NAN}) AS p75",
+        f"{frac} AS frac_in_range",
     )
 
 
@@ -454,7 +559,6 @@ def rgb_zonal(
 
 
 _FLOOR_PARTIAL_SCHEMA = "feat_id long, hist array<long>"
-_FLOOR_SCHEMA = "feat_id long, ring_px long, floor_75 double"
 
 
 def floor_level(
@@ -472,7 +576,8 @@ def floor_level(
     polygons with no data pixel in the ring (reference returns None).
 
     Same decode-once streaming-partials plan as zonal_stats; the only
-    shuffle carries 256-bin histograms.
+    shuffle carries 256-bin histograms, which merge and yield their p75
+    in the JVM with the same helpers as ``_combine``.
     """
     from .. import geom as _geom
     from ..grid import covering_cells as _cover
@@ -553,20 +658,13 @@ def floor_level(
             if rows:
                 yield pd.DataFrame(rows, columns=["feat_id", "hist"])
 
-    def finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        hist = np.sum(np.stack(pdf["hist"].map(np.asarray)), axis=0)
-        cnt = int(hist.sum())
-        return pd.DataFrame(
-            {
-                "feat_id": [int(pdf["feat_id"].iloc[0])],
-                "ring_px": [cnt],
-                "floor_75": [percentile_from_hist(hist, 75.0)],
-            }
-        )
-
     parts = cand.mapInPandas(partials, schema=_FLOOR_PARTIAL_SCHEMA)
-    return parts.groupBy("feat_id").applyInPandas(
-        finalize, schema=_FLOOR_SCHEMA
+    merged = parts.groupBy("feat_id").agg(
+        F.expr(_merged_hist("hist")).alias("hist")
+    ).selectExpr("feat_id", "hist", f"{_hist_total('hist')} AS ring_px")
+    return merged.selectExpr(
+        "feat_id", "ring_px",
+        f"{hist_percentile('hist', 'ring_px', 75.0)} AS floor_75",
     )
 
 
@@ -674,10 +772,4 @@ def zonal_stats(
     partials = cand.mapInPandas(
         lambda it: _partials_stream(it, expr=expr), schema=_PARTIAL_SCHEMA
     )
-    return (
-        partials.groupBy("feat_id")
-        .applyInPandas(
-            lambda pdf: _finalize(pdf, range_frac=range_frac),
-            schema=_FINAL_SCHEMA,
-        )
-    )
+    return _combine(partials, range_frac=range_frac)

@@ -40,6 +40,35 @@ def test_box_blur_matches_naive_window():
             assert got[i, j] == win.sum() // win.size, (i, j)
 
 
+def _box_blur_separable(px, r):
+    """Floor-mean box blur from plain int64 row then column window sums
+    (payload values cast to int64, as the integral image does)."""
+    v = px.astype(np.int64)
+    h, w = v.shape
+    rows = np.stack([v[max(i - r, 0): i + r + 1].sum(axis=0)
+                     for i in range(h)])
+    s = np.stack([rows[:, max(j - r, 0): j + r + 1].sum(axis=1)
+                  for j in range(w)], axis=1)
+    ni = np.minimum(np.arange(h) + r + 1, h) - np.maximum(np.arange(h) - r, 0)
+    nj = np.minimum(np.arange(w) + r + 1, w) - np.maximum(np.arange(w) - r, 0)
+    return s // (ni[:, None] * nj[None, :])
+
+
+@pytest.mark.parametrize("dtype,lo,hi,r", [
+    (np.uint16, 60000, 65535, 100),      # 40k-px windows of ~63k
+    (np.int32, 1 << 28, 1 << 29, 2),     # 25 values of ~2^28.5
+    (np.float32, 1e8, 1e9, 2),
+])
+def test_box_blur_wide_payload_no_int32_overflow(dtype, lo, hi, r):
+    """Planes wider than u8 above 33k px can overflow an int32
+    integral in their window sums: the blur must take int64 for them
+    and equal the exact window means."""
+    rng = np.random.default_rng(1)
+    px = (lo + rng.random((200, 200)) * (hi - lo)).astype(dtype)
+    assert px.size > 33_000
+    assert np.array_equal(_box_blur_plane(px, r), _box_blur_separable(px, r))
+
+
 def test_box_blur_constant_image_is_identity():
     px = np.full((9, 9), 42, dtype=np.uint8)
     assert (_box_blur_plane(px, 3) == 42).all()

@@ -96,30 +96,30 @@ def _run_partials(batches, monkeypatch=None, max_feats=None):
     return pd.concat(out, ignore_index=True) if out else pd.DataFrame()
 
 
-def _finalized(parts):
-    from raster_tools_spark.operators.zonal import _finalize
+def _combined(spark, parts):
+    from raster_tools_spark.operators.zonal import _PARTIAL_SCHEMA, _combine
 
+    df = spark.createDataFrame(parts, schema=_PARTIAL_SCHEMA)
     return (
-        pd.concat(
-            [_finalize(g) for _, g in parts.groupby("feat_id")],
-            ignore_index=True,
-        )
+        _combine(df).toPandas()
         .sort_values("feat_id")
         .reset_index(drop=True)
     )
 
 
-def test_partials_preagg_flush_merge_identical(monkeypatch):
+def test_partials_preagg_flush_merge_identical(spark, monkeypatch):
     """Forcing the bounded-accumulator flush after every feature must
-    finalize to exactly the same per-feature stats as the unflushed
+    combine to exactly the same per-feature stats as the unflushed
     single-yield path (the commutative-merge property the
     pre-aggregation relies on)."""
     pdf = _mk_candidates()
-    one = _finalized(_run_partials([pdf]))
-    flushed = _finalized(_run_partials([pdf], monkeypatch, max_feats=1))
+    one = _combined(spark, _run_partials([pdf]))
+    flushed = _combined(
+        spark, _run_partials([pdf], monkeypatch, max_feats=1)
+    )
     pd.testing.assert_frame_equal(one, flushed, check_exact=True)
     # split across batches (decode state carries over) is also identical
-    split = _finalized(_run_partials([pdf.iloc[:4], pdf.iloc[4:]]))
+    split = _combined(spark, _run_partials([pdf.iloc[:4], pdf.iloc[4:]]))
     pd.testing.assert_frame_equal(one, split, check_exact=True)
     assert set(one["feat_id"]) == {0, 1, 2}
     assert (one["cnt"] > 0).all()
@@ -286,7 +286,7 @@ def test_scanline_fill_vectorized_matches_scalar():
     """The difference-array fill must reproduce the scalar loop bit-
     for-bit over random simple/star/multi-ring polygons, including
     rings landing exactly on pixel centers (forced dyadic vertices)."""
-    from raster_tools_spark.geom import _scanline_fill
+    from raster_tools_spark.geom import _edges_of_rings, _scanline_fill
 
     rng = np.random.RandomState(5)
     for trial in range(60):
@@ -312,7 +312,8 @@ def test_scanline_fill_vectorized_matches_scalar():
         ref = np.zeros((h, w), dtype=bool)
         got = np.zeros((h, w), dtype=bool)
         _scanline_fill_reference(ref, rings, p, a, q, d, i0, i1, j0, j1)
-        _scanline_fill(got, rings, p, a, q, d, i0, i1, j0, j1)
+        got[i0:i1, j0:j1] = _scanline_fill(
+            _edges_of_rings(rings), p, a, q, d, i0, i1, j0, j1)
         assert np.array_equal(ref, got), f"trial {trial}"
         # clipped sub-windows must agree too
         si0, si1 = 1, max(2, h - 2)
@@ -321,7 +322,8 @@ def test_scanline_fill_vectorized_matches_scalar():
         got2 = np.zeros((h, w), dtype=bool)
         _scanline_fill_reference(
             ref2, rings, p, a, q, d, si0, si1, sj0, sj1)
-        _scanline_fill(got2, rings, p, a, q, d, si0, si1, sj0, sj1)
+        got2[si0:si1, sj0:sj1] = _scanline_fill(
+            _edges_of_rings(rings), p, a, q, d, si0, si1, sj0, sj1)
         assert np.array_equal(ref2, got2), f"trial {trial} clipped"
 
 

@@ -12,8 +12,9 @@ import io
 import re
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 SF = "/root/testdata/sf0.01"
 
@@ -94,7 +95,8 @@ def main():
     )
 
     # 5. zonal (broadcast path): image side never shuffled before the
-    # partials UDF -- exactly one Exchange (the final tiny groupBy)
+    # partials UDF -- exactly one Exchange (the final tiny groupBy), and
+    # the partials combine in the JVM (no grouped-pandas stage)
     images = synth.images_df(spark, 50, tiles_axis=16)
     cells = op_tile.assign_cells(images, tiles_axis=16)
     polys = synth.polygons_df(spark, 10, tiles_axis=16)
@@ -108,11 +110,16 @@ def main():
                 "single shuffle (final agg only)",
                 lambda p: len(re.findall(r"[+:]- Exchange ", p)) == 1,
             ),
+            (
+                "JVM combine (no FlatMapGroupsInPandas)",
+                lambda p: "FlatMapGroupsInPandas" not in p,
+            ),
         ],
     )
 
     # 5b. floor_level: same broadcast shape as zonal -- the image side
-    # is never shuffled; the only exchange carries histograms
+    # is never shuffled; the only exchange carries histograms, merged
+    # in the JVM
     fl = op_zonal.floor_level(
         synth.linear_images_df(spark, 40, tiles_axis=16),
         qcat_polys_small(spark),
@@ -125,6 +132,10 @@ def main():
             (
                 "single shuffle (final agg only)",
                 lambda p: len(re.findall(r"[+:]- Exchange ", p)) == 1,
+            ),
+            (
+                "JVM combine (no FlatMapGroupsInPandas)",
+                lambda p: "FlatMapGroupsInPandas" not in p,
             ),
         ],
     )
