@@ -42,10 +42,13 @@ import os
 import subprocess
 import sys
 
+# the checkout this script belongs to, not whichever copy is installed
+ROOT = os.path.dirname(os.path.abspath(__file__))
+
 CHILD = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
-workload, cpus, n_units = sys.argv[1], int(sys.argv[2]), int(sys.argv[3])
+sys.path.insert(0, sys.argv[1])
+workload, cpus, n_units = sys.argv[2], int(sys.argv[3]), int(sys.argv[4])
 from raster_tools_spark.session import get_spark
 
 spark = get_spark(master=f"local[{cpus}]", app_name=f"scaling_{cpus}")
@@ -161,7 +164,8 @@ spark.stop()
 
 def run_level(workload: str, cpus: int, n_units: int) -> dict:
     out = subprocess.run(
-        [sys.executable, "-c", CHILD, workload, str(cpus), str(n_units)],
+        [sys.executable, "-c", CHILD, ROOT, workload, str(cpus),
+         str(n_units)],
         capture_output=True, text=True, timeout=2400,
     )
     line = out.stdout.strip().splitlines()[-1]

@@ -55,7 +55,7 @@ def grid_centers(
         (F.lit(y_top) - (F.col("gi") + 0.5) * edge).alias("cy"),
     )
     return g.withColumn(
-        "cell", cell_col(F.col("cx"), F.col("cy"), res)
+        "cell", cell_col("cx", "cy", res)
     ).withColumn("qid", F.col("gi") * n_cols + F.col("gj"))
 
 

@@ -296,7 +296,7 @@ def nearest_values(
     qy = np.asarray(qy, dtype=np.float64).ravel()
     out = np.empty(qx.size)
     if qx.size * len(pts) > 4_000_000 and len(pts) >= 32 and qx.size:
-        _nearest_pruned(pts, z, qx, qy, out)
+        _nearest_pruned(pts, z, qx, qy, out, chunk=chunk)
         return out
     for s in range(0, qx.size, chunk):
         e = min(s + chunk, qx.size)
@@ -315,8 +315,11 @@ def _nearest_pruned(
     qy: np.ndarray,
     out: np.ndarray,
     tiles: int = 16,
+    chunk: int = 2048,
 ) -> None:
-    """Tile-pruned exact nearest scan (see nearest_values docstring)."""
+    """Tile-pruned exact nearest scan (see nearest_values docstring).
+    A tile's queries are scanned ``chunk`` rows at a time, so the
+    distance arrays stay at most ``chunk`` x |candidates|."""
     x1, x2 = qx.min(), qx.max()
     y1, y2 = qy.min(), qy.max()
     ts = max(x2 - x1, y2 - y1, 1e-9) / tiles
@@ -340,10 +343,13 @@ def _nearest_pruned(
         mdy = np.maximum(np.abs(py - by1), np.abs(py - by2))
         dup2 = (mdx * mdx + mdy * mdy).min()
         cand = np.nonzero(dmin2 <= dup2 * (1.0 + 1e-9) + 1e-12)[0]
-        dqx = qx[qsel, None] - px[None, cand]
-        dqy = qy[qsel, None] - py[None, cand]
-        d2 = dqx * dqx + dqy * dqy
-        out[qsel] = z[cand[np.argmin(d2, axis=1)]]
+        pcx, pcy = px[None, cand], py[None, cand]
+        for s in range(0, qsel.size, chunk):
+            qs = qsel[s: s + chunk]
+            dqx = qx[qs, None] - pcx
+            dqy = qy[qs, None] - pcy
+            d2 = dqx * dqx + dqy * dqy
+            out[qs] = z[cand[np.argmin(d2, axis=1)]]
 
 
 def dedup_points(points: np.ndarray, z: np.ndarray):

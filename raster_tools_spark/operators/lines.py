@@ -89,7 +89,7 @@ def line_profile(
     falling on cells with no tile are dropped (outside coverage).
     """
     samples = sample_line_points(lines, step).withColumn(
-        "cell_id", cell_col(F.col("sx"), F.col("sy"), res)
+        "cell_id", cell_col("sx", "sy", res)
     )
     t = tiles.select("cell_id", "bytes", "fmt", "x0", "y_top")
     cand = samples.join(t, "cell_id").select(
@@ -240,7 +240,7 @@ def line_carpet_profile(
     (line_id, seq, cx, cy, value)."""
     samples = sample_carpet_points(
         lines, step, distance, carpet_step
-    ).withColumn("cell_id", cell_col(F.col("sx"), F.col("sy"), res))
+    ).withColumn("cell_id", cell_col("sx", "sy", res))
     t = tiles.select("cell_id", "bytes", "fmt", "x0", "y_top")
     cand = samples.join(t, "cell_id").select(
         "line_id", "seq", "off", "sx", "sy", "cx", "cy",

@@ -178,19 +178,17 @@ def retile_job(
     completed unit is a manifest row; replay is idempotent
     (manifest.run_with_manifest)."""
     from .. import manifest as mf
-    from .tile import cell_col, parent_cell_col
-
-    shift = (res - work_res) * 1  # res levels between tile and unit
+    from .tile import parent_cell_sql
 
     def process(pending: DataFrame) -> DataFrame:
         tiles = retile(
             pending.drop("unit"), res=res, nodata=nodata
         )
         # unit of an output tile = its res->work_res ancestor
-        unit = F.col("cell_id")
+        unit = "cell_id"
         for _ in range(res - work_res):
-            unit = parent_cell_col(unit)
-        return tiles.withColumn("unit", unit)
+            unit = parent_cell_sql(unit)
+        return tiles.withColumn("unit", F.expr(unit))
 
     work = images_cells.withColumn(
         "unit", F.col(f"qk_r{work_res}")

@@ -7,12 +7,15 @@ re-anchors its geo transform per index feature
 inverse-affine grid math (utils.py:114-144).  The anchor is a
 deterministic function of ``phash`` (FIXTURES.md section 1); the
 wrapping int64 Knuth multiply that ANSI-mode Spark SQL rejects is
-decomposed into overflow-free halves (see ``_anchor_cols``), so the
+decomposed into overflow-free halves (see ``_anchor_sql``), so the
 anchor AND the cell keys derived from it -- at every resolution,
 parent rollups included -- are JVM-side expressions that stay inside
-whole-stage codegen.  The ``hilbert`` key is still an Arrow
-pandas UDF: a Python hop on the scan whenever a consumer reads that
-column (column pruning drops it otherwise).
+whole-stage codegen.  They are built as SQL text (``cell_sql``,
+``parent_cell_sql``; ``cell_col``/``parent_cell_col`` wrap them as
+Columns), which the JVM parses in one call where the same tree built
+from Column objects costs one py4j call per operator.  The ``hilbert``
+key is still an Arrow pandas UDF: a Python hop on the scan whenever a
+consumer reads that column (column pruning drops it otherwise).
 
 Scale notes: no shuffle here at all; this is a narrow map over the scan.
 ``hilbert`` is the range-partitioning key that keeps spatially adjacent
@@ -31,11 +34,17 @@ from ..grid import TILE_SIZE, WORLD_TOP, _ANCHOR_MULT, cell_edge, RES_TILE
 
 _M31 = (1 << 31) - 1
 _M62 = (1 << 62) - 1
+_M28 = (1 << 28) - 1
 
 
-def _anchor_cols(phash: Column, tiles_axis: int):
-    """JVM-side ``phash -> (x0, y_top)`` anchor -- bit-exact mirror of
-    grid.anchor_of_phash / synth.anchor_of_phash_windowed.
+def _dbl(v: float) -> str:
+    """Exact Spark SQL double literal (a bare ``0.25`` parses as DECIMAL)."""
+    return f"{float(v)!r}D"
+
+
+def _anchor_sql(phash: str, tiles_axis: int) -> tuple[str, str]:
+    """JVM-side ``phash -> (x0, y_top)`` anchor as SQL text -- bit-exact
+    mirror of grid.anchor_of_phash / synth.anchor_of_phash_windowed.
 
     numpy computes ``mixed = wrap64(p * C) & (2^62 - 1)``; ANSI-mode
     Spark throws on long overflow instead of wrapping, so the multiply
@@ -51,56 +60,58 @@ def _anchor_cols(phash: Column, tiles_axis: int):
     2^63 - 2^31 - 1, so no ANSI overflow is reachable.  tx/ty then
     scale by the dyadic TILE_SIZE -- long->double cast and double
     multiply are the same IEEE operations numpy performs, so the
-    result is bit-identical to the former pandas UDF (equivalence
-    property test in test_r06_optim.py sweeps random/extreme/negative
-    phashes).  Being a plain expression, the anchor now fuses into
-    whole-stage codegen -- the ArrowEvalPython hop this UDF used to
-    put on every image scan (and the asNondeterministic marking that
-    kept the optimizer from cloning it) are gone.
+    result is bit-identical to numpy (equivalence property test in
+    test_r06_optim.py sweeps random/extreme/negative phashes).  Being a
+    plain expression, the anchor fuses into whole-stage codegen: no
+    Python hop on the image scan.
     """
     mask = (tiles_axis if tiles_axis < 4096 else 4096) - 1
-    c = F.lit(int(_ANCHOR_MULT))
-    p = phash.cast("long")
-    t = (F.shiftright(p, 31).bitwiseAND(F.lit(_M31)) * c).bitwiseAND(
-        F.lit(_M31)
-    )
-    u = (p.bitwiseAND(F.lit(_M31)) * c).bitwiseAND(F.lit(_M62))
-    mixed = (u + F.shiftleft(t, 31)).bitwiseAND(F.lit(_M62))
-    tx = F.shiftright(mixed, 20).bitwiseAND(F.lit(mask))
-    ty = F.shiftright(mixed, 2).bitwiseAND(F.lit(mask))
-    x0 = tx.cast("double") * F.lit(float(TILE_SIZE))
-    y_top = F.lit(float(WORLD_TOP)) - ty.cast("double") * F.lit(
-        float(TILE_SIZE)
-    )
+    c = int(_ANCHOR_MULT)
+    p = f"CAST({phash} AS BIGINT)"
+    t = f"(((shiftright({p}, 31) & {_M31}L) * {c}L) & {_M31}L)"
+    u = f"((({p} & {_M31}L) * {c}L) & {_M62}L)"
+    mixed = f"(({u} + shiftleft({t}, 31)) & {_M62}L)"
+    tx = f"(shiftright({mixed}, 20) & {mask}L)"
+    ty = f"(shiftright({mixed}, 2) & {mask}L)"
+    x0 = f"(CAST({tx} AS DOUBLE) * {_dbl(TILE_SIZE)})"
+    y_top = f"({_dbl(WORLD_TOP)} - CAST({ty} AS DOUBLE) * {_dbl(TILE_SIZE)})"
     return x0, y_top
 
 
-def cell_col(x: Column, y: Column, res: int) -> Column:
-    """Packed quadtree cell id as a JVM-side expression (codegen'd).
+def cell_sql(x: str, y: str, res: int) -> str:
+    """Packed quadtree cell id of SQL expressions ``x, y`` as SQL text
+    (codegen'd).
 
     Mirrors grid.cell_of_xy bit-for-bit: floor into the res grid, pack
     (res << 56) | (ix << 28) | iy.
     """
-    edge = float(cell_edge(res))
-    ix = F.floor(x / F.lit(edge)).cast("long")
-    iy = F.floor((F.lit(WORLD_TOP) - y) / F.lit(edge)).cast("long")
+    edge = _dbl(cell_edge(res))
+    ix = f"CAST(floor(({x}) / {edge}) AS BIGINT)"
+    iy = f"CAST(floor(({_dbl(WORLD_TOP)} - ({y})) / {edge}) AS BIGINT)"
+    return f"(shiftleft({res}L, 56) | shiftleft({ix}, 28) | {iy})"
+
+
+def parent_cell_sql(cell: str) -> str:
+    """Quadtree rollup res r -> r-1 of the SQL expression ``cell`` as
+    SQL text (utils.py:38-51 quad fold)."""
+    c = f"({cell})"
+    ix = f"(shiftright({c}, 28) & {_M28})"
     return (
-        F.shiftleft(F.lit(res).cast("long"), 56)
-        .bitwiseOR(F.shiftleft(ix, 28))
-        .bitwiseOR(iy)
+        f"(shiftleft(shiftright({c}, 56) - 1, 56)"
+        f" | shiftleft(shiftright({ix}, 1), 28)"
+        f" | shiftright({c} & {_M28}, 1))"
     )
 
 
-def parent_cell_col(cell: Column) -> Column:
-    """JVM-side quadtree rollup res r -> r-1 (utils.py:38-51 quad fold)."""
-    res = F.shiftright(cell, 56)
-    ix = F.shiftright(cell, 28).bitwiseAND(F.lit((1 << 28) - 1))
-    iy = cell.bitwiseAND(F.lit((1 << 28) - 1))
-    return (
-        F.shiftleft(res - 1, 56)
-        .bitwiseOR(F.shiftleft(F.shiftright(ix, 1), 28))
-        .bitwiseOR(F.shiftright(iy, 1))
-    )
+def cell_col(x: str, y: str, res: int) -> Column:
+    """``cell_sql`` as a Column; ``x, y`` are SQL expressions (column
+    names, typically)."""
+    return F.expr(cell_sql(x, y, res))
+
+
+def parent_cell_col(cell: str) -> Column:
+    """``parent_cell_sql`` as a Column."""
+    return F.expr(parent_cell_sql(cell))
 
 
 def assign_cells(
@@ -113,25 +124,29 @@ def assign_cells(
     ``cx, cy`` is the tile center (the PIP-join point); ``qk_r{n}`` keys
     the center's cell at each resolution.  Assignment is a pure function
     of the row -> bit-identical at any parallelism (north rule).
+    Existing columns of those names are replaced.
+
+    The columns are one ``selectExpr`` of SQL text: the same expressions
+    built as Column objects took ~0.15-0.35 s of py4j calls per job.
+    Each column inlines the expressions it depends on (a lateral alias
+    would resolve to an input column of the same name); whole-stage
+    codegen evaluates the shared subexpressions once.
     """
-    x0c, ytc = _anchor_cols(F.col("phash"), tiles_axis)
-    df = (
-        images.withColumn("x0", x0c)
-        .withColumn("y_top", ytc)
-        .withColumn("cx", F.col("x0") + F.col("w").cast("double") * 0.25)
-        .withColumn("cy", F.col("y_top") - F.col("h").cast("double") * 0.25)
-    )
+    x0, y_top = _anchor_sql("phash", tiles_axis)
+    cx = f"({x0} + CAST(w AS DOUBLE) * 0.25D)"
+    cy = f"({y_top} - CAST(h AS DOUBLE) * 0.25D)"
+    new = {"x0": x0, "y_top": y_top, "cx": cx, "cy": cy}
     for res in res_levels:
-        df = df.withColumn(f"qk_r{res}", cell_col(F.col("cx"), F.col("cy"), res))
+        new[f"qk_r{res}"] = cell_sql(cx, cy, res)
+    df = images.drop(*new, "hilbert").selectExpr(
+        "*", *(f"{sql} AS {name}" for name, sql in new.items())
+    )
     # Hilbert distance of the canonical-tile cell: locality-preserving
     # long key for repartitionByRange.  Computed in a vectorized pandas
     # UDF -- an unrolled Catalyst expression for the 10-level bit
     # twiddle grows exponentially in tree size, so the Arrow batch path
     # is both the simpler and the faster plan here.
-    df = df.withColumn(
-        "hilbert", _hilbert_udf(F.col("cx"), F.col("cy"))
-    )
-    return df
+    return df.withColumn("hilbert", _hilbert_udf(F.col("cx"), F.col("cy")))
 
 
 @F.pandas_udf(T.LongType())
@@ -173,7 +188,7 @@ def quad_rollup(
     )
     for _ in range(levels):
         out = (
-            out.withColumn("cell", parent_cell_col(F.col("cell")))
+            out.withColumn("cell", parent_cell_col("cell"))
             .groupBy("cell")
             .agg(
                 F.sum("s").alias("s"),

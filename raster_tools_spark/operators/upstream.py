@@ -289,7 +289,7 @@ def _pair_with_polygons(
         "pcell", F.explode(_padded_cover_udf(pair_res, grow)("geom_wkb"))
     ).select("feat_id", "geom_wkb", "pcell")
     s = samples.withColumn(
-        "scell", cell_col(F.col("sx"), F.col("sy"), pair_res)
+        "scell", cell_col("sx", "sy", pair_res)
     )
     cand = s.join(F.broadcast(pcells), s["scell"] == pcells["pcell"]).select(
         "line_id", "feat_id", "seq", "sx", "sy",

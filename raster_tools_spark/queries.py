@@ -432,7 +432,7 @@ def _rects_sql() -> str:
 
 def _pip_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _points(spark, sf_dir).withColumn(
-        "qk_r9", op_tile.cell_col(F.col("cx"), F.col("cy"), 9)
+        "qk_r9", op_tile.cell_col("cx", "cy", 9)
     ).withColumn("image_id", F.col("event_id").cast("string"))
     rects = _rect_polygons(spark, sf_dir)
     pairs = op_pip.pip_join(
@@ -634,10 +634,10 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         pts = _points(spark, sf_dir)
         return pts.select(
             "event_id",
-            op_tile.cell_col(F.col("cx"), F.col("cy"), 9).alias("cell9"),
-            op_tile.cell_col(F.col("cx"), F.col("cy"), 10).alias("cell10"),
+            op_tile.cell_col("cx", "cy", 9).alias("cell9"),
+            op_tile.cell_col("cx", "cy", 10).alias("cell10"),
             op_tile.parent_cell_col(
-                op_tile.cell_col(F.col("cx"), F.col("cy"), 9)
+                op_tile.cell_sql("cx", "cy", 9)
             ).alias("cell8"),
         )
 
@@ -668,7 +668,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def quad_rollup(spark, sf_dir):
         pts = _points(spark, sf_dir).withColumn(
-            "cell10", op_tile.cell_col(F.col("cx"), F.col("cy"), 10)
+            "cell10", op_tile.cell_col("cx", "cy", 10)
         )
         out = op_tile.quad_rollup(pts, "cell10", "value", levels=2)
         return out.select(
@@ -1015,7 +1015,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
         ray-cast refine: diamond polygons, one oversized hot diamond
         (nation 3) driving the broadcast phase."""
         pts = _dense_points(spark, sf_dir).withColumn(
-            "qk_r9", op_tile.cell_col(F.col("cx"), F.col("cy"), 9)
+            "qk_r9", op_tile.cell_col("cx", "cy", 9)
         ).withColumn("image_id", F.col("event_id").cast("string"))
         polys = _diamond_polygons(spark, sf_dir)
         pairs = op_pip.pip_join(
@@ -1054,7 +1054,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
             "((event_id * 48271) % 4096) + 0.5 as cx",
             f"{WORLD_TOP:.1f} - (((event_id * 69621) % 4096) + 0.5) as cy",
         ).withColumn(
-            "cell", op_tile.cell_col(F.col("cx"), F.col("cy"), 9)
+            "cell", op_tile.cell_col("cx", "cy", 9)
         )
         qdf = pts.filter(F.col("id") < 100).selectExpr(
             "id as qid", "cx", "cy", "cell"
@@ -1719,7 +1719,7 @@ def queries() -> Dict[str, Callable[[SparkSession, str], DataFrame]]:
             f"{WORLD_TOP:.1f} - (((event_id * 69621) % 4096) + 0.5) as cy",
             "value as z",
         ).withColumn(
-            "cell", op_tile.cell_col(F.col("cx"), F.col("cy"), 9)
+            "cell", op_tile.cell_col("cx", "cy", 9)
         )
         grid = interp.grid_centers(
             spark, 0.0, WORLD_TOP, 64, 64, 64.0, res=9

@@ -4,6 +4,20 @@ Scale-minded defaults: AQE on (runtime re-plan + skew join), Arrow on
 (every UDF in this engine is vectorized), UTC session timezone (oracle
 comparison), shuffle partitions sized to cores for local mode (a real
 cluster overrides via spark-submit --conf).
+
+Python task fixed cost: pyspark's worker calls
+``importlib.invalidate_caches()`` at the start of every task, and below
+CPython 3.13 that re-reads the whole directory of ``pyspark.zip`` once
+per cached ``zipimporter`` -- ~0.25 s per task, most of a small UDF
+stage's Python time.  3.13 made ``zipimporter.invalidate_caches`` lazy.
+For ``local[...]`` masters, whose workers get this package on their
+``PYTHONPATH`` below, the workers come from ``_pydaemon`` instead of
+``pyspark.daemon``; it re-reads an archive only when it changed.  An
+``extra_conf`` that sets ``spark.python.daemon.module`` wins, and the
+stock daemon stays when the working directory holds another copy of
+this package (see ``_workers_import_this_package``).
+``tools/worker_tax.py`` measures the cost (median gap between two tasks
+on one worker, and "time to initialize Python workers").
 """
 
 from __future__ import annotations
@@ -58,11 +72,29 @@ def get_spark(
         # while staying far above the per-file overhead floor.
         .config("spark.sql.files.maxPartitionBytes", str(16 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    if (master == "local" or master.startswith("local[")) and \
+            _workers_import_this_package():
+        # workers share this host's PYTHONPATH (set above), so the
+        # daemon can come from this package; see _pydaemon
+        extra_conf.setdefault("spark.python.daemon.module",
+                              "raster_tools_spark._pydaemon")
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _workers_import_this_package() -> bool:
+    """Whether ``python -m`` in the workers' working directory (this
+    process's) imports this ``raster_tools_spark``: ``-m`` puts that
+    directory first on ``sys.path``, so another copy of the package
+    there -- say an older checkout without ``_pydaemon`` -- would be
+    the one the daemon starts from."""
+    local = os.path.join(os.getcwd(), "raster_tools_spark")
+    here = os.path.dirname(os.path.abspath(__file__))
+    return not os.path.exists(local) or os.path.samefile(local, here)
 
 
 def _threads_of(master: str, default: int) -> int:

@@ -5,11 +5,15 @@ produce bit-identical tile assignments and PIP join rows
 import json
 import subprocess
 import sys
+from pathlib import Path
+
+# the checkout this test belongs to, not whichever copy is installed
+ROOT = str(Path(__file__).resolve().parent.parent)
 
 CHILD = r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
-cpus = int(sys.argv[1])
+sys.path.insert(0, sys.argv[1])
+cpus = int(sys.argv[2])
 from raster_tools_spark.session import get_spark
 from raster_tools_spark import synth
 from raster_tools_spark.operators import pip, tile
@@ -102,7 +106,7 @@ spark.stop()
 
 def _run(cpus: int) -> dict:
     out = subprocess.run(
-        [sys.executable, "-c", CHILD, str(cpus)],
+        [sys.executable, "-c", CHILD, ROOT, str(cpus)],
         capture_output=True,
         text=True,
         timeout=420,

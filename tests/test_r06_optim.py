@@ -244,6 +244,17 @@ def test_nearest_pruned_matches_full_scan():
             np.asarray(pts, float), z, q[:, 0].copy(), q[:, 1].copy(),
             got, tiles=int(rng.randint(2, 20)))
         assert np.array_equal(ref, got), f"trial {trial}"
+    # one tile holding > 2048 queries: scanned in several row chunks,
+    # still identical (also with a chunk that leaves a ragged tail)
+    pts = np.round(rng.rand(300, 2) * 8) * 0.25
+    z = rng.rand(300)
+    q = np.r_[rng.rand(5000, 2) * 0.5 + 3.0, rng.rand(40, 2) * 30 - 10]
+    ref = _nearest_scan_reference(pts, z, q[:, 0], q[:, 1])
+    for chunk in (2048, 1000):
+        got = np.empty(len(q))
+        _nearest_pruned(pts, z, q[:, 0].copy(), q[:, 1].copy(), got,
+                        tiles=4, chunk=chunk)
+        assert np.array_equal(ref, got), chunk
     # the public gate: big workloads flip to the pruned path and still
     # equal the reference scan
     pts = rng.rand(600, 2) * 12
@@ -405,10 +416,8 @@ def test_anchor_cols_matches_numpy(spark):
     """The JVM anchor expression must reproduce the numpy wrapping
     Knuth multiply bit-for-bit for any int64 phash -- random bits,
     negatives, and the extremes -- at windowed and full tile axes."""
-    import pyspark.sql.functions as F
-
     from raster_tools_spark.grid import anchor_of_phash
-    from raster_tools_spark.operators.tile import _anchor_cols
+    from raster_tools_spark.operators.tile import _anchor_sql
     from raster_tools_spark.synth import anchor_of_phash_windowed
 
     rng = np.random.RandomState(17)
@@ -421,9 +430,9 @@ def test_anchor_cols_matches_numpy(spark):
     df = spark.createDataFrame(
         [(int(v),) for v in ph], schema="phash long")
     for axis in (16, 256, 1024, 4096, 8192):
-        x0c, ytc = _anchor_cols(F.col("phash"), axis)
+        x0, y_top = _anchor_sql("phash", axis)
         got = (
-            df.select("phash", x0c.alias("x0"), ytc.alias("y_top"))
+            df.selectExpr("phash", f"{x0} AS x0", f"{y_top} AS y_top")
             .toPandas().sort_values("phash").reset_index(drop=True)
         )
         if axis >= 4096:
